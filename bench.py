@@ -51,6 +51,7 @@ from __future__ import annotations
 
 import json
 import os
+import statistics
 import subprocess
 import sys
 import time
@@ -424,10 +425,9 @@ def main():
                 "flagship": flagship,
             }
         )
-        srt = sorted(
+        median_now = statistics.median(
             round(a / (4 * b), 3) for a, b in zip(timesN, times4N)
         )
-        median_now = srt[len(srt) // 2]
         if (
             attempt + 1 >= min_attempts
             and best_halves >= 0.8
@@ -455,7 +455,7 @@ def main():
             "interleaved half order cancels drift); see attempts for the full "
             "distribution"
         ),
-        "median_attempt_efficiency": ratios[len(ratios) // 2],
+        "median_attempt_efficiency": round(statistics.median(ratios), 3),
         f"local{SCALE_N}_overlay_secs_all": [round(t, 3) for t in timesN],
         f"local{4 * SCALE_N}_overlay_secs_all": [round(t, 3) for t in times4N],
         f"local{SCALE_N}_queries": results[SCALE_N]["queries"],

@@ -22,10 +22,21 @@ Stage map (same semantics as the scalar kernel, SURVEY.md §2.2):
                   vectorized orientation-sign prefilter; the exact python-int cross
                   solver (split.cross_pair) runs only on truly interacting pairs
   fill (A10)    — per-tile compute_fills over contiguous slices
-  extract       — per-tile scalar walk (already per-job work)
+  extract       — three tiers, per tile and rule (_fast_contours_batch):
+                  * every boundary node of degree 2: vectorized walk over the
+                    whole batch (pointer-doubling cycle labels, then per-step
+                    column writes or list ranking for long rings);
+                  * some node of degree > 2 (crossings, pinches): exact replay
+                    of the scalar trigger loop, all such tiles stepping in
+                    lockstep (_lockstep_walk) and the last few unfinished ones
+                    restarting in a per-tile python replay (_sim_walk_tiles);
+                  * dangling ends, degenerate incidences, bailed or over-cap
+                    rings, and fast_extract=False: the scalar walk_contours
 """
 
 from __future__ import annotations
+
+from typing import NamedTuple
 
 import numpy as np
 
@@ -472,41 +483,341 @@ def graph_batch(
     return out
 
 
-def _sim_walk_tiles(
-    tiles, tile_fast, link_slot, lax, lay, lbx, lby, a_node, b_node, inv, ends,
-    n_nodes, first_pos, deg, ent_links, ft, clockwise_output, max_ring,
+# Below this many unfinished walkers the per-tile python replay beats another
+# lockstep iteration: an iteration costs 65-140 us of numpy call overhead
+# however few walkers remain (the top of the range when walkers start rings
+# at most steps), while the python replay walks 0.8-1.1 us per link (both
+# measured on AMD EPYC, CPython 3.11, numpy 1.26), so the break-even is
+# ~80-150 walkers each taking one step. The upper end also covers the
+# handed-over tiles' walked prefixes, which the python replay walks again.
+_LOCKSTEP_MIN_WALKERS = 128
+# start-link seek window: a seeking walker scans this many links per gather
+_SEEK_WINDOW = 16
+
+
+class _TileGraph(NamedTuple):
+    """The boundary links of some tiles, renumbered 0.. in link order (each
+    tile a contiguous range lo[i]:hi[i]), and their nodes, renumbered 0.. in
+    node order, with each node's incidence entries in scalar scan order."""
+
+    lo: np.ndarray
+    hi: np.ndarray
+    ax: np.ndarray
+    ay: np.ndarray
+    bx: np.ndarray
+    by: np.ndarray
+    a_node: np.ndarray
+    b_node: np.ndarray
+    hole: np.ndarray  # per link: the rule's inside flag above it (ring is a hole)
+    node_x: np.ndarray
+    node_y: np.ndarray
+    first: np.ndarray  # per node: first incidence entry
+    deg: np.ndarray
+    ent_link: np.ndarray  # per entry: its link
+
+
+def _tile_graph(tiles, link_slot, lax, lay, lbx, lby, a_node, b_node, first_pos,
+                deg, ent_links, hole):
+    """_TileGraph of `tiles` (ascending slots) from the batch-wide walk arrays.
+    Tiles never share a node, so every incidence entry of a tile's node is a
+    link of the same tile."""
+    lo_b = np.searchsorted(link_slot, tiles, side="left")
+    n_l = np.searchsorted(link_slot, tiles, side="right") - lo_b
+    hi = np.cumsum(n_l)
+    lo = hi - n_l
+    links = np.arange(int(hi[-1])) + np.repeat(lo_b - lo, n_l)
+    an, bn = a_node[links], b_node[links]
+    new_id = np.zeros(len(deg), dtype=np.int64)  # batch node id -> tile graph's
+    new_id[an] = 1
+    new_id[bn] = 1
+    nodes = np.flatnonzero(new_id)
+    new_id[nodes] = np.arange(len(nodes))
+    dg = deg[nodes].astype(np.int64)
+    first = np.cumsum(dg) - dg
+    ents = np.arange(int(dg.sum())) + np.repeat(first_pos[nodes] - first, dg)
+    ax, ay, bx, by = lax[links], lay[links], lbx[links], lby[links]
+    an = new_id[an]
+    bn = new_id[bn]
+    node_x = np.empty(len(nodes), dtype=np.int64)
+    node_y = np.empty(len(nodes), dtype=np.int64)
+    node_x[an], node_y[an] = ax, ay
+    node_x[bn], node_y[bn] = bx, by
+    new_link = np.empty(len(link_slot), dtype=np.int64)
+    new_link[links] = np.arange(len(links))
+    return _TileGraph(
+        lo, hi, ax, ay, bx, by, an, bn, hole[links], node_x, node_y, first, dg,
+        new_link[ent_links[ents]],
+    )
+
+
+def _replay_tiles(
+    tiles, tile_fast, link_slot, lax, lay, lbx, lby, a_node, b_node,
+    first_pos, deg, ent_links, hole, clockwise_output, max_ring,
 ):
     """Exact replay of the scalar trigger loop (extract.walk_contours +
     left_top_link + next_link, iOverlay/src/core/extract.rs:400-583) for tiles
     that contain a node of boundary degree > 2. The walk there is HISTORY-
     dependent — next_link's rotation is the current ring's direction and both
-    scans filter by visited — so it cannot be a precomputed permutation; but
-    these tiles are tiny (a handful of rings each), the replay is plain python
-    over prefetched lists, and ring validation/areas still run vectorized in
-    _finalize_fast. Any unusual shape (dead end, over-cap ring) bails the tile
-    to the scalar path, which guarantees identical output.
+    scans filter by visited — so it cannot be a precomputed permutation.
+    Instead every tile gets one walker and all walkers step in lockstep
+    (_lockstep_walk); tiles never share a node, so each tile's history, and
+    so its output, is the scalar loop's. The tiles still unfinished when few
+    walkers remain restart in the per-tile python replay (_sim_walk_tiles).
+    Any unusual shape (dead end, over-cap ring) bails the tile to the scalar
+    path (tile_fast[slot] = False), which guarantees identical output.
 
     Returns (slot, rank, hole, first_pts, lens, buf_x, buf_y) for the walked
     rings, in TILED coordinates (caller converts per job), or None."""
+    args = (link_slot, lax, lay, lbx, lby, a_node, b_node, first_pos, deg,
+            ent_links, hole)
     cwo = bool(clockwise_output)
-    m = len(lax)
-    AX = lax.tolist()
-    AY = lay.tolist()
-    BX = lbx.tolist()
-    BY = lby.tolist()
-    AN = a_node.tolist()
-    BN = b_node.tolist()
-    FP = first_pos.tolist()
-    DG = deg.tolist()
-    EL = ent_links.tolist()
-    FTL = ft.tolist()
-    nx_t = np.zeros(n_nodes, dtype=np.int64)
-    ny_t = np.zeros(n_nodes, dtype=np.int64)
-    nx_t[inv] = ends[:, 0]
-    ny_t[inv] = ends[:, 1]
-    NX = nx_t.tolist()
-    NY = ny_t.tolist()
-    VIS = bytearray(m)
+    parts = []
+    g = _tile_graph(tiles, *args)
+    # int64 cross products stay exact while every link spans < 2^30 per axis
+    # (left_top's operands reach two link extents); wider tiles replay in
+    # python ints
+    if len(tiles) >= _LOCKSTEP_MIN_WALKERS and max(
+        int((g.bx - g.ax).max()), int(np.abs(g.by - g.ay).max())
+    ) < (1 << 30):
+        part, rest = _lockstep_walk(g, tile_fast, tiles, cwo, max_ring)
+        parts.append(part)
+        tiles = tiles[rest]
+        g = _tile_graph(tiles, *args) if len(tiles) else None
+    if len(tiles):
+        parts.append(_sim_walk_tiles(g, tile_fast, tiles, cwo, max_ring))
+    slot, rank, hole_r, fx, fy, lens, vx, vy = (
+        np.concatenate([np.asarray(p[i], dtype=np.int64) for p in parts])
+        for i in range(8)
+    )
+    k = len(slot)
+    if k == 0:
+        return None
+    w = int(lens.max())
+    bx = np.zeros((k, w), dtype=np.int64)
+    by = np.zeros((k, w), dtype=np.int64)
+    row = np.repeat(np.arange(k), lens - 1)
+    offs = np.concatenate([np.zeros(1, dtype=np.int64), np.cumsum(lens - 1)])
+    col = np.arange(len(vx)) - offs[row]
+    bx[row, col] = vx
+    by[row, col] = vy
+    return slot, rank, hole_r.astype(bool), np.stack([fx, fy], axis=1), lens, bx, by
+
+
+# lockstep walker state columns (RING, ENTRY adjacent: one slice records a step)
+_W_TILE, _W_SCAN, _W_HI, _W_SEEK, _W_LAST, _W_DIR, _W_CNT, _W_RANK = range(8)
+_W_RING, _W_ENTRY = 8, 9
+
+
+def _lockstep_walk(g, tile_fast, tiles, cwo, max_ring):
+    """The scalar trigger loop for many tiles at once, one walker per tile,
+    one step per walker per iteration: seek the next unvisited start link,
+    pick its left-top link, step along next_link, write the point and mark
+    the link visited. left_top_link and next_link run as folds over the
+    node's incidence columns with the scalar tie rules, so each walker takes
+    exactly the scalar loop's path. Bailed tiles get tile_fast = False.
+
+    Returns (rings, rest): rings are the finished tiles' rings as (slot,
+    rank, hole, first_x, first_y, lens, pts_x, pts_y), the points after each
+    ring's first concatenated in ring order; rest indexes the tiles still
+    unfinished when fewer than _LOCKSTEP_MIN_WALKERS walkers remained. Their
+    partial rings are dropped, so their walks start over elsewhere."""
+    ax, ay, bx, by, an, bn = g.ax, g.ay, g.bx, g.by, g.a_node, g.b_node
+    first, deg = g.first, g.deg
+    m = len(ax)
+    # A walker's position is the incidence entry it arrived by: its node is
+    # the entry's node, and its incoming link is the entry's link. Entry
+    # tables carry one sentinel entry (index -1, link m, always visited)
+    # that dead ends and padding point at.
+    ent_link = np.append(g.ent_link, m)
+    n_ent = len(ent_link)
+    ent_node = np.repeat(np.arange(len(deg)), deg)
+    at_a = an[g.ent_link] == ent_node
+    ent_vx = np.where(at_a, bx[g.ent_link], ax[g.ent_link]) - g.node_x[ent_node]
+    ent_vy = np.where(at_a, by[g.ent_link], ay[g.ent_link]) - g.node_y[ent_node]
+    # per link: its entries at its a and b nodes; per entry: the same
+    # link's entry at its other node
+    ent_a = np.empty(m, dtype=np.int64)
+    ent_b = np.empty(m, dtype=np.int64)
+    ent_a[g.ent_link[at_a]] = np.flatnonzero(at_a)
+    ent_b[g.ent_link[~at_a]] = np.flatnonzero(~at_a)
+    twin = np.append(np.where(at_a, ent_b[g.ent_link], ent_a[g.ent_link]), n_ent - 1)
+    # at a degree-2 node, the other entry; multi marks higher degrees
+    e_deg = deg[ent_node]
+    other = 2 * first[ent_node] + 1 - np.arange(n_ent - 1)
+    other = np.append(np.where(e_deg == 2, other, 0), n_ent - 1)
+    multi_at = np.append(e_deg > 2, False)
+    vis = np.zeros(m + 1, dtype=bool)
+    vis[m] = True
+
+    def next_entry(qa, cw):
+        """extract._LinkGraph.next_link for walkers that arrived by entry qa
+        (their incoming link is visited): the chosen entry at the same node,
+        or -1."""
+        o = other[qa]
+        best = np.where(vis[ent_link[o]], -1, o)
+        multi = np.flatnonzero(multi_at[qa])
+        if len(multi) == 0:
+            return best
+        # degree > 2: the scalar fold over the free entries in scan order,
+        # with the rotation sense rf folded into the vectors
+        qm = qa[multi]
+        nd = ent_node[qm]
+        e0, dg = first[nd], deg[nd]
+        rf = np.where(cw[multi], 1, -1)
+        col = np.arange(int(dg.max()))
+        q = np.where(col < dg[:, None], e0[:, None] + col, -1)
+        ok = ~vis[ent_link[q]]
+        vpx, vpy = ent_vx[q], ent_vy[q]
+        ap180 = (ent_vx[qm] * rf)[:, None] * vpy - (ent_vy[qm] * rf)[:, None] * vpx >= 0
+        rpx, rpy = vpx * rf[:, None], vpy * rf[:, None]
+        n = len(multi)
+        bq = np.full(n, -1, dtype=np.int64)
+        wbx = np.zeros(n, dtype=np.int64)  # rf * (the best entry's vector)
+        wby = np.zeros(n, dtype=np.int64)
+        ab180 = np.zeros(n, dtype=bool)
+        for j in col.tolist():
+            okj, apj = ok[:, j], ap180[:, j]
+            # a later entry wins if it lies in the best's half-plane and
+            # strictly before it, or if only the best lies in the closed
+            # half-plane ahead of the incoming direction
+            turn = vpx[:, j] * wby - vpy[:, j] * wbx < 0
+            take = okj & ((bq < 0) | np.where(ab180 == apj, turn, ab180))
+            ab180 = np.where(take, apj, ab180)
+            bq = np.where(take, q[:, j], bq)
+            wbx = np.where(take, rpx[:, j], wbx)
+            wby = np.where(take, rpy[:, j], wby)
+        best[multi] = bq
+        return best
+
+    def left_top(lk):
+        """extract._LinkGraph.left_top_link for an array of start links."""
+        nd = an[lk]
+        e0 = first[nd]
+        dg = deg[nd]
+        t = lk.copy()
+        for j in range(int(dg.max())):
+            sel = slice(None) if j < 2 else np.flatnonzero(dg > j)
+            i = ent_link[e0[sel] + j]
+            ts = t[sel]
+            tax, tay = ax[ts], ay[ts]
+            cr = (bx[ts] - tax) * (by[i] - tay) - (by[ts] - tay) * (bx[i] - tax)
+            t[sel] = np.where((i != ts) & (cr >= 0) & ~vis[i], i, ts)
+        return t
+
+    n = len(g.lo)
+    w = np.zeros((n, 10), dtype=np.int64)
+    w[:, _W_TILE] = np.arange(n)
+    w[:, _W_SCAN] = g.lo
+    w[:, _W_HI] = g.hi
+    w[:, _W_SEEK] = 1
+    done = np.zeros(n, dtype=bool)  # tiles whose walk finished here
+    win = np.arange(_SEEK_WINDOW)
+    n_rings = 0
+    rings: list = []  # per ring start batch: (tile, rank, hole, first x, first y)
+    steps: list = []  # per iteration: (ring, arrival entry) of every step
+    while len(w) >= _LOCKSTEP_MIN_WALKERS:
+        sk = np.flatnonzero(w[:, _W_SEEK])
+        if len(sk):
+            # the first unvisited link at or after each seeker's scan point
+            start = np.full(len(sk), -1, dtype=np.int64)
+            pend = np.arange(len(sk))
+            while len(pend):
+                s0 = w[sk[pend], _W_SCAN]
+                hi = w[sk[pend], _W_HI]
+                idx = s0[:, None] + win
+                free = (idx < hi[:, None]) & ~vis[np.minimum(idx, m - 1)]
+                hit = free.any(axis=1)
+                start[pend[hit]] = s0[hit] + free[hit].argmax(axis=1)
+                more = ~hit & (s0 + _SEEK_WINDOW < hi)
+                w[sk[pend[more]], _W_SCAN] += _SEEK_WINDOW
+                pend = pend[more]
+            fin = start < 0
+            if fin.any():
+                done[w[sk[fin], _W_TILE]] = True
+                keep = np.ones(len(w), dtype=bool)
+                keep[sk[fin]] = False
+                w = w[keep]
+                sk = np.flatnonzero(w[:, _W_SEEK])
+                start = start[~fin]
+        n_sk = len(sk)
+        if n_sk:
+            top = left_top(start)
+            hole = g.hole[top]
+            d = hole == cwo
+            vis[top] = True
+            # walk from top's a end when d, else from its b end
+            qa = np.where(d, ent_a[top], ent_b[top])
+            w[sk, _W_SCAN] = start + 1
+            w[sk, _W_SEEK] = 0
+            w[sk, _W_ENTRY] = qa
+            w[sk, _W_DIR] = d
+            w[sk, _W_CNT] = 0
+            w[sk, _W_RING] = n_rings + np.arange(n_sk)
+            rings.append((w[sk, _W_TILE], w[sk, _W_RANK], hole,
+                          np.where(d, bx[top], ax[top]), np.where(d, by[top], ay[top])))
+            w[sk, _W_RANK] += 1
+            n_rings += n_sk
+            # a new ring's last link is next_link at top's other end, turning
+            # the other way; it is asked together with every walker's step
+            q = next_entry(np.concatenate([twin[qa], w[:, _W_ENTRY]]),
+                           np.concatenate([~d, w[:, _W_DIR] == 1]))
+            last, q = q[:n_sk], q[n_sk:]
+            w[sk, _W_LAST] = ent_link[last]
+        else:
+            q = next_entry(w[:, _W_ENTRY], w[:, _W_DIR] == 1)
+        # every walker takes its step: write the point, mark the link
+        steps.append(w[:, _W_RING:_W_ENTRY + 1].copy())
+        nxt = ent_link[q]
+        vis[nxt] = True
+        w[:, _W_ENTRY] = twin[q]
+        w[:, _W_CNT] += 1
+        w[:, _W_SEEK] = nxt == w[:, _W_LAST]
+        # the scalar loop bails a tile at an isolated degenerate pair (no
+        # last link), a dead end, or a ring that reaches max_ring points
+        # (its guard and its over-cap check)
+        bad = (q < 0) | (w[:, _W_CNT] >= max_ring)
+        if n_sk:
+            bad[sk[last < 0]] = True
+        if bad.any():
+            tile_fast[tiles[w[bad, _W_TILE]]] = False
+            w = w[~bad]
+
+    rest = w[:, _W_TILE]
+    if not n_rings:
+        return _NO_RINGS, rest
+    r_tile, r_rank, r_hole, r_fx, r_fy = (np.concatenate(c) for c in zip(*rings))
+    keep = done[r_tile]
+    p = np.concatenate(steps)
+    p = p[keep[p[:, 0]]]
+    p = p[np.argsort(p[:, 0], kind="stable")]  # step order per ring
+    p_node = ent_node[p[:, 1]]
+    lens = np.bincount(p[:, 0], minlength=n_rings)[keep] + 1
+    return (
+        tiles[r_tile[keep]], r_rank[keep], r_hole[keep], r_fx[keep], r_fy[keep],
+        lens, g.node_x[p_node], g.node_y[p_node],
+    ), rest
+
+
+_NO_RINGS = (np.empty(0, dtype=np.int64),) * 8
+
+
+def _sim_walk_tiles(g, tile_fast, tiles, cwo, max_ring):
+    """Per-tile python replay of the scalar trigger loop over prefetched lists
+    of ONLY these tiles' links (g = _tile_graph(tiles)): the walker floor's
+    tail of _lockstep_walk. Same contract and ring form as _lockstep_walk."""
+    AX = g.ax.tolist()
+    AY = g.ay.tolist()
+    BX = g.bx.tolist()
+    BY = g.by.tolist()
+    AN = g.a_node.tolist()
+    BN = g.b_node.tolist()
+    FP = g.first.tolist()
+    DG = g.deg.tolist()
+    EL = g.ent_link.tolist()
+    FTL = g.hole.tolist()
+    NX = g.node_x.tolist()
+    NY = g.node_y.tolist()
+    VIS = bytearray(len(AX))
 
     def _left_top(lk):
         nd = AN[lk]
@@ -568,8 +879,6 @@ def _sim_walk_tiles(
                 vbx, vby, best = vpx, vpy, lid
         return best
 
-    lo_all = np.searchsorted(link_slot, tiles, side="left").tolist()
-    hi_all = np.searchsorted(link_slot, tiles, side="right").tolist()
     o_slot: list[int] = []
     o_rank: list[int] = []
     o_hole: list[bool] = []
@@ -578,7 +887,7 @@ def _sim_walk_tiles(
     fy: list[int] = []
     flat_x: list[int] = []
     flat_y: list[int] = []
-    for ti, lo_t, hi_t in zip(tiles.tolist(), lo_all, hi_all):
+    for ti, lo_t, hi_t in zip(tiles.tolist(), g.lo.tolist(), g.hi.tolist()):
         n0 = len(o_slot)
         f0 = len(flat_x)
         bail = False
@@ -638,30 +947,7 @@ def _sim_walk_tiles(
             tile_fast[ti] = False
             del o_slot[n0:], o_rank[n0:], o_hole[n0:], o_len[n0:]
             del fx[n0:], fy[n0:], flat_x[f0:], flat_y[f0:]
-    k = len(o_slot)
-    if k == 0:
-        return None
-    lens = np.asarray(o_len, dtype=np.int64)
-    w = int(lens.max())
-    bx = np.zeros((k, w), dtype=np.int64)
-    by = np.zeros((k, w), dtype=np.int64)
-    vx = np.asarray(flat_x, dtype=np.int64)
-    vy = np.asarray(flat_y, dtype=np.int64)
-    row = np.repeat(np.arange(k), lens - 1)
-    offs = np.concatenate([np.zeros(1, dtype=np.int64), np.cumsum(lens - 1)])
-    col = np.arange(len(vx)) - offs[row]
-    bx[row, col] = vx
-    by[row, col] = vy
-    first_pts = np.stack([np.asarray(fx, dtype=np.int64), np.asarray(fy, dtype=np.int64)], axis=1)
-    return (
-        np.asarray(o_slot, dtype=np.int64),
-        np.asarray(o_rank, dtype=np.int64),
-        np.asarray(o_hole, dtype=bool),
-        first_pts,
-        lens,
-        bx,
-        by,
-    )
+    return (o_slot, o_rank, o_hole, fx, fy, o_len, flat_x, flat_y)
 
 
 def _fast_contours_batch(
@@ -673,9 +959,10 @@ def _fast_contours_batch(
     case: simple faces, no pinch points), the reference walk's next-link choice
     is forced at every step — only the start link (min id, scan order), the
     left-top pick and the direction bit need the scalar rules, and those
-    vectorize. Produces contours BIT-IDENTICAL to walk_contours (differential-
-    tested); tiles with any higher-degree node, a self-referential node, or a
-    ring longer than max_ring are reported for the scalar path.
+    vectorize. Tiles with a higher-degree node replay the scalar trigger loop
+    exactly (_replay_tiles). Produces contours BIT-IDENTICAL to walk_contours
+    (differential-tested); tiles with a dangling end, a self-referential
+    node, or a ring longer than max_ring are reported for the scalar path.
 
     Returns (tile_fast: bool per slot, contours: dict slot -> [(ring, hole)])."""
     from .extract import rule_inside
@@ -751,11 +1038,12 @@ def _fast_contours_batch(
     # dangling boundary ends (degenerate fills) keep the scalar path
     _slow_nodes(np.flatnonzero(deg == 1))
     # tiles with ANY higher-degree node (XOR crossings, union pinch points)
-    # are served by an exact per-tile replay of the scalar trigger loop below
-    # (round 4): the walk there is history-dependent (next_link's rotation is
-    # the ring's own direction and left_top/next_link filter by visited), so
-    # it cannot be a precomputed permutation — but those tiles are a tiny
-    # python loop each, and their ring VALIDATION still vectorizes.
+    # are served by an exact replay of the scalar trigger loop below: the walk
+    # there is history-dependent (next_link's rotation is the ring's own
+    # direction and left_top/next_link filter by visited), so it cannot be a
+    # precomputed permutation. _replay_tiles steps all such tiles in
+    # lockstep (numpy), handing the last few to a per-tile python replay; their
+    # ring VALIDATION still vectorizes.
     sim_tile = np.zeros(nslots, dtype=bool)
     multi = np.flatnonzero(deg > 2)
     if len(multi):
@@ -785,7 +1073,7 @@ def _fast_contours_batch(
     # b_node. A directed edge's id IS its link's entry id at its to_node, so
     # the degree-2 successor is partner ^ 1 (continue out the partner's other
     # end); entries at non-degree-2 nodes keep a harmless self-partner (their
-    # tiles are slow or replayed by the sim).
+    # tiles are slow or replayed).
     partner = np.arange(2 * m, dtype=idt)
     partner[p0] = p1.astype(idt, copy=False)
     partner[p1] = p0.astype(idt, copy=False)
@@ -795,11 +1083,18 @@ def _fast_contours_batch(
     to_node = np.where(dbit == 1, b_node[dlink], a_node[dlink])
     perm = partner ^ idt(1)
 
-    # cycle labeling: min link id reachable (pointer doubling)
+    # cycle labeling: min link id reachable (pointer doubling). Stop at the
+    # first round that leaves val unchanged: then val <= val[p] everywhere,
+    # so val is constant on every orbit of p (= perm^(2^k)), and the 2^k-long
+    # windows starting on one orbit cover its whole perm cycle — every label
+    # is already its cycle's minimum.
     val = dlink.copy()
     p = perm.copy()
     for _ in range(int(np.ceil(np.log2(max(2 * m, 2)))) + 1):
-        val = np.minimum(val, val[p])
+        nv = np.minimum(val, val[p])
+        if np.array_equal(nv, val):
+            break
+        val = nv
         p = p[p]
     # ring length per start = (#directed ids with this label) / 2
     counts = np.bincount(val, minlength=m)
@@ -812,8 +1107,8 @@ def _fast_contours_batch(
 
     fast_links = tile_fast[link_slot]
     start_links = start_links[fast_links[start_links]]
-    # sim tiles' labels are garbage (self-partner bounces at multi nodes chop
-    # their cycles); the replay below produces their rings instead
+    # replayed tiles' labels are garbage (self-partner bounces at multi nodes
+    # chop their cycles); the replay below produces their rings instead
     if sim_tile.any():
         start_links = start_links[~sim_tile[link_slot[start_links]]]
 
@@ -935,10 +1230,10 @@ def _fast_contours_batch(
 
     # ---- order-sensitive tiles: exact replay of the scalar trigger loop -----
     if (sim_tile & tile_fast).any():
-        sim = _sim_walk_tiles(
+        sim = _replay_tiles(
             np.flatnonzero(sim_tile & tile_fast), tile_fast, link_slot,
-            lax, lay, lbx, lby, a_node, b_node, inv, ends, n_nodes,
-            first_pos, deg, link_of_entry[order],
+            lax, lay, lbx, lby, a_node, b_node, first_pos, deg,
+            link_of_entry[order],
             rule_inside((lfill & 1) != 0, (lfill & 4) != 0, rule),
             clockwise_output, max_ring,
         )
@@ -975,7 +1270,7 @@ def _fast_contours_batch(
     if len(r_slot) == 0:
         return tile_fast, None
     # emission order = scalar trigger order: ascending start link per slot
-    # (sim tiles recorded their replayed trigger rank)
+    # (replayed tiles recorded their trigger rank)
     order_r = np.lexsort((emit_rank, r_slot))
     ring_data = {
         "slot": r_slot[order_r],
@@ -1388,7 +1683,10 @@ def overlay_batch_flat_out(
 # (eff 0.840) — the fast walk wins ~42% at BOTH parallelism levels with scaling
 # above the 0.8 bar, so it is the default everywhere. Pinch/crossing tiles
 # (boundary degree > 2) are served by the exact scalar-trigger replay in
-# _sim_walk_tiles rather than the full scalar fallback.
+# _replay_tiles (a lockstep numpy walk over all such tiles, with a per-tile
+# python tail for the last few) rather than the full scalar fallback; only
+# tiles it bails (dead ends, over-cap rings) and degenerate ones take the
+# scalar walk.
 FAST_EXTRACT_DEFAULT = True
 
 

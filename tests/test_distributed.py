@@ -565,14 +565,12 @@ def test_narrow_boundary_schema(spark):
         assert wide == dict(b.dtypes)
 
 
-def test_fused_apply_pack_matches_legacy(spark):
+def test_fused_apply_pack_matches_legacy(spark, monkeypatch):
     """The fused terminal apply+pack (_apply_pack_strips_iter: numpy
     _apply_marks + strip pack inside one mapInArrow, replacing the JVM chain
     sort/zip_with/Generate pipeline) must produce the identical ring multiset
     through the full distributed pipeline, and its fill plan must contain no
     Generate (the chain explode happens in numpy)."""
-    import os
-
     from ioverlay_spark.options import FillRule, OverlayRule
     from ioverlay_spark.operators.distributed import (
         contours_to_segments_df,
@@ -585,17 +583,14 @@ def test_fused_apply_pack_matches_legacy(spark):
     ).localCheckpoint()
 
     def run(flag):
-        os.environ["SPARK_GRAFT_APPLY_FUSED"] = flag
-        try:
-            out = distributed_overlay(
-                contours_to_segments_df(spark, df),
-                OverlayRule.INTERSECT,
-                FillRule.EVEN_ODD,
-                force_distributed=True,
-            )
-            pdf = out.toPandas()
-        finally:
-            os.environ.pop("SPARK_GRAFT_APPLY_FUSED", None)
+        monkeypatch.setenv("SPARK_GRAFT_APPLY_FUSED", flag)
+        out = distributed_overlay(
+            contours_to_segments_df(spark, df),
+            OverlayRule.INTERSECT,
+            FillRule.EVEN_ODD,
+            force_distributed=True,
+        )
+        pdf = out.toPandas()
         rings = sorted(
             (int(a), tuple(sorted(zip(x, y))))
             for a, x, y in zip(pdf["area2"], pdf["pts_x"], pdf["pts_y"])
@@ -607,12 +602,10 @@ def test_fused_apply_pack_matches_legacy(spark):
     assert fused == legacy and len(fused) == 24 * 24
 
 
-def test_fused_apply_pack_plan_and_fills(spark):
+def test_fused_apply_pack_plan_and_fills(spark, monkeypatch):
     """Fill-level differential on the lazy-terminal path: identical fill
     multiset fused vs legacy, the fused inputs attach only on the eligible
     terminal round, and the fused fill plan has no Generate node."""
-    import os
-
     from ioverlay_spark.options import FillRule, OverlayRule
     from ioverlay_spark.operators.distributed import (
         compute_fills_df,
@@ -634,15 +627,12 @@ def test_fused_apply_pack_plan_and_fills(spark):
     assert getattr(split, "_ioverlay_apply_inputs", None) is not None
 
     def run(flag):
-        os.environ["SPARK_GRAFT_APPLY_FUSED"] = flag
-        try:
-            fills = compute_fills_df(
-                split, FillRule.EVEN_ODD, boundary_rule=OverlayRule.INTERSECT
-            )
-            plan = fills._jdf.queryExecution().executedPlan().toString()
-            pdf = fills.toPandas()
-        finally:
-            os.environ.pop("SPARK_GRAFT_APPLY_FUSED", None)
+        monkeypatch.setenv("SPARK_GRAFT_APPLY_FUSED", flag)
+        fills = compute_fills_df(
+            split, FillRule.EVEN_ODD, boundary_rule=OverlayRule.INTERSECT
+        )
+        plan = fills._jdf.queryExecution().executedPlan().toString()
+        pdf = fills.toPandas()
         cols = ["ax", "ay", "bx", "by", "fill"]
         return plan, sorted(map(tuple, pdf[cols].to_numpy().tolist()))
 

@@ -126,16 +126,6 @@ def test_embed_knn_stays_jvm(spark):
     )
 
 
-def test_ivf_assign_broadcasts_centroids(spark):
-    from ioverlay_spark.operators.similarity import ivf_assign, ivf_centroids
-
-    emb = spark.read.parquet(f"{SF}/embeddings.parquet")
-    df = ivf_assign(emb, ivf_centroids(emb, 8))
-    p = plan_str(df)
-    assert "BroadcastExchange" in p
-    assert "SortMergeJoin" not in p
-
-
 def test_dim_join_broadcasts(spark):
     import ioverlay_spark.queries as q
 
@@ -188,6 +178,7 @@ def test_ivf_assign_broadcasts_centroids(spark):
     emb = spark.read.parquet(f"{SF}/embeddings.parquet")
     df = ivf_assign(emb, ivf_centroids(emb, 8))
     p = plan_str(df)
+    assert "BroadcastExchange" in p
     assert "BroadcastHashJoin" in p or "BroadcastNestedLoopJoin" in p
     assert "SortMergeJoin" not in p
 
