@@ -3,13 +3,12 @@
 Reproduces exactly what one mapInArrow batch does in overlay_rows (the flat
 Arrow path, round 4 third pass):
   (a) flat decode of the RecordBatch list columns (offsets+values)
-  (b) overlay_batch_flat kernel (split+fill+walk, 3 rules)
-  (c) per-ring emission loop (python appends over nested Shapes)
-  (d) output RecordBatch construction (concat + ListArray.from_arrays)
+  (b) overlay_batch_flat_out kernel (split+fill+walk, 3 rules)
+  (c) flat emission (per-rule arrays concatenated, pair ids gathered)
+  (d) output RecordBatch construction (ListArray.from_arrays)
 
 Jobs are the bench flagship's shape: L-hexagon subject vs shifted-rect clip,
 three rules per job, derived from synthetic int ids like the sf0.1 lineitem key.
-Run with the legacy arg `--pandas` to profile the old mapInPandas loop shape.
 """
 import sys
 import time
@@ -18,7 +17,7 @@ import numpy as np
 import pyarrow as pa
 
 sys.path.insert(0, "/root/repo")
-from ioverlay_spark.kernel.batch import overlay_batch_flat
+from ioverlay_spark.kernel.batch import overlay_batch_flat_out
 from ioverlay_spark.options import DEFAULT_OPTIONS, FillRule, OverlayRule
 
 N = int(sys.argv[1]) if len(sys.argv) > 1 else 40_000
@@ -86,42 +85,32 @@ ring_job = np.concatenate([np.arange(n), np.arange(n)])
 ring_subj = np.zeros(2 * n, dtype=bool)
 ring_subj[:n] = True
 t1 = time.perf_counter()
-res = overlay_batch_flat(
-    P, counts, ring_job, ring_subj, n, rule_objs, fr, DEFAULT_OPTIONS, with_areas=True
-)
+res = overlay_batch_flat_out(P, counts, ring_job, ring_subj, n, rule_objs, fr, DEFAULT_OPTIONS)
 t2 = time.perf_counter()
-op, orr, osid, ocid, oa = [], [], [], [], []
-rxs, rys, lens = [], [], []
-for pid, r in zip(pids, res):
-    for ri, rule in enumerate(rule_objs):
-        shapes, areas = r[rule]
-        for sid, (shape, s_areas) in enumerate(zip(shapes, areas)):
-            for cid, (ring, a2) in enumerate(zip(shape, s_areas)):
-                op.append(pid)
-                orr.append(rule_vals[ri])
-                osid.append(sid)
-                ocid.append(cid)
-                rxs.append(ring[:, 0])
-                rys.append(ring[:, 1])
-                lens.append(len(ring))
-                oa.append(a2)
-t3 = time.perf_counter()
+parts = [res[rule] for rule in rule_objs]
+op = np.concatenate([pids[p[0]] for p in parts])
+orr = np.concatenate([np.full(len(p[0]), ri, dtype=np.int32) for ri, p in enumerate(parts)])
+osid = np.concatenate([p[1] for p in parts])
+ocid = np.concatenate([p[2] for p in parts]).astype(np.int32)
+lens = np.concatenate([p[3] for p in parts])
+PTS = np.concatenate([p[4] for p in parts], axis=0)
+oa = np.concatenate([p[5] for p in parts])
 m = len(op)
 offs = np.zeros(m + 1, dtype=np.int32)
-if m:
-    np.cumsum(lens, out=offs[1:])
-vx = np.concatenate(rxs) if m else np.empty(0, dtype=np.int64)
-vy = np.concatenate(rys) if m else np.empty(0, dtype=np.int64)
+np.cumsum(lens, out=offs[1:])
+t3 = time.perf_counter()
 po = pa.array(offs)
 out = pa.RecordBatch.from_arrays(
     [
-        pa.array(np.asarray(op, dtype=np.int64)),
-        pa.array(orr, type=pa.string()),
-        pa.array(np.asarray(osid, dtype=np.int64)),
-        pa.array(np.asarray(ocid, dtype=np.int32)),
-        pa.ListArray.from_arrays(po, pa.array(np.ascontiguousarray(vx))),
-        pa.ListArray.from_arrays(po, pa.array(np.ascontiguousarray(vy))),
-        pa.array(np.asarray(oa, dtype=np.int64)),
+        pa.array(op),
+        pa.DictionaryArray.from_arrays(
+            pa.array(orr), pa.array(rule_vals, type=pa.string())
+        ).cast(pa.string()),
+        pa.array(osid),
+        pa.array(ocid),
+        pa.ListArray.from_arrays(po, pa.array(np.ascontiguousarray(PTS[:, 0]))),
+        pa.ListArray.from_arrays(po, pa.array(np.ascontiguousarray(PTS[:, 1]))),
+        pa.array(oa),
     ],
     names=["pair_id", "rule", "shape_id", "contour_idx", "pts_x", "pts_y", "area2"],
 )

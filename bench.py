@@ -394,9 +394,11 @@ def main():
     # are recorded; the median attempt-ratio is reported alongside the headline
     # (ADVICE r02 bench.py:340 — the distribution is visible, not a silent max).
     # the wall budget, not the attempt count, is the binding stop in a degraded
-    # host window (healthy windows early-exit at >=0.8 after 2 attempts), so a
-    # high attempt cap just lets a bad window use all of the budgeted retries
-    max_attempts = int(os.environ.get("SPARK_GRAFT_SCALE_ATTEMPTS", "8"))
+    # host window (healthy windows early-exit at >=0.8 after 3 attempts), so a
+    # high attempt cap just lets a bad window use all of the budgeted retries.
+    # Odd cap and odd early exits: the median attempt ratio is then one
+    # measured attempt, not the mean of the middle two
+    max_attempts = int(os.environ.get("SPARK_GRAFT_SCALE_ATTEMPTS", "7"))
     # >=3 attempts so the record never rests on one clean pair (VERDICT r03 #3):
     # the loop only stops early once the per-half minima AND the median
     # attempt ratio both clear the 0.8 north rule
@@ -406,6 +408,9 @@ def main():
     times4N: list[float] = []
     attempts_log = []
     last = {}  # most recent worker result per level (for queries/counts echo)
+    # why the loop ended: "criteria" (odd early exit), "budget" (wall budget;
+    # the count stays whatever it reached, even or odd) or "max_attempts"
+    stop_reason = "max_attempts"
     for attempt in range(max_attempts):
         gate = wait_for_healthy_host()
         halves = [4 * SCALE_N, SCALE_N] if attempt % 2 == 0 else [SCALE_N, 4 * SCALE_N]
@@ -430,9 +435,14 @@ def main():
         )
         if (
             attempt + 1 >= min_attempts
+            and (attempt + 1) % 2 == 1
             and best_halves >= 0.8
             and median_now >= 0.8
-        ) or (time.time() - t_start > budget_s):
+        ):
+            stop_reason = "criteria"
+            break
+        if time.time() - t_start > budget_s:
+            stop_reason = "budget"
             break
         if attempt + 1 < max_attempts:
             # when the gate's own probes showed a degraded window, waiting out
@@ -461,6 +471,7 @@ def main():
         f"local{SCALE_N}_queries": results[SCALE_N]["queries"],
         f"local{4 * SCALE_N}_queries": results[4 * SCALE_N]["queries"],
         "attempts": attempts_log,
+        "attempts_stop": stop_reason,
         "host_gate_cpu_probes": [a["host_cpu"] for a in attempts_log],
         "per_query_efficiency": {"overlay": round(tN / (4 * t4N), 3)},
         # the north-rule headline: the flagship overlay pipeline (the engine's
@@ -526,6 +537,7 @@ def main():
             "median_attempt_efficiency": scaling["median_attempt_efficiency"],
             "attempt_ratios": ratios,
             "attempts": len(attempts_log),
+            "attempts_stop": scaling["attempts_stop"],
             "efficiency_method": "per-half minima across interleaved attempts",
             "efficiency_vs_host_cpu_ceiling": scaling.get("efficiency_vs_host_cpu_ceiling"),
             "detail": detail_path,

@@ -360,39 +360,31 @@ def vectorized_ring_segments_flat(P, counts, ring_job, ring_subj, options=DEFAUL
     )
 
 
-def _batch_tiled_segments(jobs, options):
-    """Shared ingest + tile placement: jobs' rings -> one raw normalized Segments
-    set with each job translated into its own disjoint x-tile.
-
-    Returns (Segments, off, y0, W), the string _EMPTY (no segments at all), or
-    None (huge coords / overflow risk: caller must take the scalar path)."""
-    nj = len(jobs)
-    # ---- ingest + clean -----------------------------------------------------
-    ring_pts: list[np.ndarray] = []
+def _flatten_jobs(jobs):
+    """(subj_rings, clip_rings) jobs -> the flat ring layout
+    (P, counts, ring_job, ring_subj): P stacks every ring's points, the other
+    three are per ring."""
+    rings: list[np.ndarray] = []
     ring_job: list[int] = []
     ring_subj: list[bool] = []
     for jid, (subj, clip) in enumerate(jobs):
-        for r in subj:
-            ring_pts.append(np.asarray(r, dtype=np.int64).reshape(-1, 2))
-            ring_job.append(jid)
-            ring_subj.append(True)
-        for r in clip:
-            ring_pts.append(np.asarray(r, dtype=np.int64).reshape(-1, 2))
-            ring_job.append(jid)
-            ring_subj.append(False)
-    nr = len(ring_pts)
-    if nr == 0:
-        return _EMPTY
-    t = vectorized_ring_segments(ring_pts, ring_job, ring_subj, options)
-    if t is None:
-        return None
-    if t == _EMPTY:
-        return _EMPTY
-    return _tile_place(t, nj)
+        for is_subj, group in ((True, subj), (False, clip)):
+            for r in group:
+                rings.append(np.asarray(r, dtype=np.int64).reshape(-1, 2))
+                ring_job.append(jid)
+                ring_subj.append(is_subj)
+    counts = np.fromiter((len(r) for r in rings), dtype=np.int64, count=len(rings))
+    P = np.concatenate(rings) if rings else np.empty((0, 2), dtype=np.int64)
+    return P, counts, np.asarray(ring_job, dtype=np.int64), np.asarray(ring_subj, dtype=bool)
 
 
 def _batch_tiled_segments_flat(P, counts, ring_job, ring_subj, nj, options):
-    """_batch_tiled_segments over the flat ring layout (no per-job python loop)."""
+    """Shared ingest + tile placement: the flat ring layout -> one raw
+    normalized Segments set with each job translated into its own disjoint
+    x-tile.
+
+    Returns (Segments, off, y0, W), the string _EMPTY (no segments at all), or
+    None (huge coords / overflow risk: caller must take the scalar path)."""
     t = vectorized_ring_segments_flat(P, counts, ring_job, ring_subj, options)
     if t is None:
         return None
@@ -430,8 +422,9 @@ def _tile_place(t, nj):
 def _graph_batch_parts(jobs, fill_rule, options):
     """One tiled split+fill pass over a whole batch. Returns
     (segs, all_fills, starts, off, y0) in TILED coordinates, _EMPTY, or None."""
-    t = _batch_tiled_segments(jobs, options)
-    return _split_fill_parts(t, len(jobs), fill_rule)
+    nj = len(jobs)
+    t = _batch_tiled_segments_flat(*_flatten_jobs(jobs), nj, options)
+    return _split_fill_parts(t, nj, fill_rule)
 
 
 def _split_fill_parts(t, nj, fill_rule):
@@ -1381,8 +1374,10 @@ def _finalize_fast(ring_data, options, with_areas: bool = False) -> dict[int, Sh
 # (job, shape_id, contour_idx, lens, pts, area2) arrays instead of per-ring
 # python lists/dicts: the emission side of the Arrow workers and the scalar
 # one-shot API were ~30-40% per-ring python at 10^6-ring batches (round-5
-# scenario profile). Semantics are identical to _finalize_fast + the callers'
-# flatten loops — differential-tested against them over the fixture corpus.
+# scenario profile). Semantics are identical to _finalize_fast + a per-ring
+# flatten loop — _finalize_fast stays as the fallback for slots the flat
+# finalize cannot serve, and the per-job scalar kernel is the differential
+# reference (tests/test_batch_flat_out.py).
 
 _FLAT_EMPTY = (
     np.empty(0, dtype=np.int64),
@@ -1422,13 +1417,17 @@ def _shapes_to_flat(slot_shapes):
     if not slots:
         return _FLAT_EMPTY
     pts = np.concatenate(pieces) if pieces else np.empty((0, 2), dtype=np.int64)
+    try:
+        a2_arr = np.asarray(a2, dtype=np.int64)
+    except OverflowError:  # scalar-kernel rings past 2^31: exact python ints
+        a2_arr = np.asarray(a2, dtype=object)
     return (
         np.asarray(slots, dtype=np.int64),
         np.asarray(sids, dtype=np.int64),
         np.asarray(cidxs, dtype=np.int64),
         np.asarray(lens, dtype=np.int64),
         pts,
-        np.asarray(a2, dtype=np.int64),
+        a2_arr,
     )
 
 
@@ -1566,7 +1565,10 @@ def _finalize_fast_flat(ring_data, options):
 
 
 def _overlay_tail_flat(t, nj, rules, options, fast_extract):
-    """_overlay_tail producing {rule: flat tuple} (sorted by job/shape/contour)."""
+    """Extraction over split+filled tiled parts -> {rule: flat tuple} sorted by
+    (job, shape, contour): the batch fast walk per rule, _finalize_fast_flat
+    (with _finalize_fast for its fallback slots), and the scalar walk for
+    tiles the fast walk did not serve."""
     if t == _EMPTY:
         return {rule: _FLAT_EMPTY for rule in rules}
     segs, all_fills, starts, off, y0 = t
@@ -1646,11 +1648,16 @@ def overlay_batch_flat_out(
     options: OverlayOptions = DEFAULT_OPTIONS,
     fast_extract: bool | None = None,
 ) -> dict:
-    """overlay_batch_flat with FLAT output: {rule: (job, shape_id, contour_idx,
-    lens, pts, area2)} where pts is the (sum(lens), 2) int64 concatenation of
-    every output ring in (job, shape_id, contour_idx) order. Ring sets are
-    identical to overlay_batch_flat(..., with_areas=True) over the same input;
-    jobs need not be pre-sorted in ring_job."""
+    """Batch overlay over the FLAT ring layout with FLAT output. Input: P is
+    the (total_pts, 2) int64 stack of all rings' points, counts/ring_job/
+    ring_subj are per ring — the zero-per-row ingest for Arrow list columns
+    (offsets+values straight from the RecordBatch); jobs need not be
+    pre-sorted in ring_job. Output: {rule: (job, shape_id, contour_idx, lens,
+    pts, area2)} where pts is the (sum(lens), 2) int64 concatenation of every
+    output ring in (job, shape_id, contour_idx) order. Rings, order and areas
+    are bit-identical to per-job kernel runs; a batch whose coordinates need
+    python-int math (or a single job) takes the per-job scalar kernel.
+    fast_extract selects the vectorized walk (see FAST_EXTRACT_DEFAULT)."""
     if fast_extract is None:
         fast_extract = FAST_EXTRACT_DEFAULT
     rules = [OverlayRule(r) for r in rules]
@@ -1702,23 +1709,37 @@ def overlay_batch(
     """Run a batch of (subj_rings, clip_rings) jobs; returns per-job {rule: shapes}.
 
     Bit-identical to per-job kernel runs (tiles are disjoint in x, so no stage ever
-    pairs segments across jobs). Falls back to the scalar path when coordinates are
-    large enough to need python-int math batch-wide. fast_extract enables the
-    vectorized degree-2 ring walk (see FAST_EXTRACT_DEFAULT). with_areas=True
-    returns {rule: (shapes, areas)} with the validation scan's per-ring signed
-    area2 — emitting consumers should use it instead of re-walking each ring."""
-    if fast_extract is None:
-        fast_extract = FAST_EXTRACT_DEFAULT
-    rules = [OverlayRule(r) for r in rules]
+    pairs segments across jobs). An adapter over overlay_batch_flat_out: the
+    jobs are flattened, run, and the flat rings regrouped per job in
+    (shape, contour) order as views of one buffer. with_areas=True returns
+    {rule: (shapes, areas)} with the validation scan's per-ring signed area2 —
+    emitting consumers should use it instead of re-walking each ring."""
     nj = len(jobs)
     if nj == 0:
         return []
-    if nj == 1:
-        return _scalar_batch(jobs, rules, fill_rule, options, with_areas=with_areas)
-    t = _graph_batch_parts(jobs, fill_rule, options)
-    if t is None:
-        return _scalar_batch(jobs, rules, fill_rule, options, with_areas=with_areas)
-    return _overlay_tail(t, nj, rules, options, fast_extract, with_areas)
+    flat = overlay_batch_flat_out(
+        *_flatten_jobs(jobs), nj, rules, fill_rule, options, fast_extract
+    )
+    results: list[dict] = [{} for _ in range(nj)]
+    for rule, (job, _, cidx, lens, pts, a2) in flat.items():
+        shapes: list[Shapes] = [[] for _ in range(nj)]
+        areas: list[list[list[int]]] = [[] for _ in range(nj)]
+        offs = np.zeros(len(lens) + 1, dtype=np.int64)
+        np.cumsum(lens, out=offs[1:])
+        ob = offs.tolist()
+        for i, (j, first, a) in enumerate(
+            zip(job.tolist(), (cidx == 0).tolist(), a2.tolist())
+        ):
+            ring = pts[ob[i]:ob[i + 1]]
+            if first:
+                shapes[j].append([ring])
+                areas[j].append([a])
+            else:
+                shapes[j][-1].append(ring)
+                areas[j][-1].append(a)
+        for j in range(nj):
+            results[j][rule] = (shapes[j], areas[j]) if with_areas else shapes[j]
+    return results
 
 
 def _jobs_from_flat(P, counts, ring_job, ring_subj, nj):
@@ -1730,108 +1751,3 @@ def _jobs_from_flat(P, counts, ring_job, ring_subj, nj):
         tgt = jobs[int(ring_job[r])]
         (tgt[0] if ring_subj[r] else tgt[1]).append(P[S[r]:S[r + 1]])
     return jobs
-
-
-@gc_paused_fn
-def overlay_batch_flat(
-    P: np.ndarray,
-    counts: np.ndarray,
-    ring_job: np.ndarray,
-    ring_subj: np.ndarray,
-    nj: int,
-    rules: list[OverlayRule],
-    fill_rule: FillRule = FillRule.EVEN_ODD,
-    options: OverlayOptions = DEFAULT_OPTIONS,
-    fast_extract: bool | None = None,
-    with_areas: bool = False,
-) -> list[dict[OverlayRule, Shapes]]:
-    """overlay_batch over the FLAT ring layout: P = (total_pts, 2) int64 stack of
-    all rings' points, counts/ring_job/ring_subj per ring. This is the zero-
-    per-row ingest for Arrow list columns (offsets+values straight from the
-    RecordBatch) — results are identical to overlay_batch over the same rings."""
-    if fast_extract is None:
-        fast_extract = FAST_EXTRACT_DEFAULT
-    rules = [OverlayRule(r) for r in rules]
-    if nj == 0:
-        return []
-    if nj == 1:
-        return _scalar_batch(
-            _jobs_from_flat(P, counts, ring_job, ring_subj, nj),
-            rules, fill_rule, options, with_areas=with_areas,
-        )
-    t = _split_fill_parts(
-        _batch_tiled_segments_flat(P, counts, ring_job, ring_subj, nj, options),
-        nj, fill_rule,
-    )
-    if t is None:
-        return _scalar_batch(
-            _jobs_from_flat(P, counts, ring_job, ring_subj, nj),
-            rules, fill_rule, options, with_areas=with_areas,
-        )
-    return _overlay_tail(t, nj, rules, options, fast_extract, with_areas)
-
-
-def _overlay_tail(t, nj, rules, options, fast_extract, with_areas):
-    """Extraction over split+filled tiled parts (shared by the jobs/flat entries)."""
-    _mt = (lambda: ([], [])) if with_areas else (lambda: [])
-    results: list[dict[OverlayRule, Shapes]] = [
-        {rule: _mt() for rule in rules} for _ in range(nj)
-    ]
-    if t == _EMPTY:
-        return results
-    segs, all_fills, starts, off, y0 = t
-    # boundary masks per rule, computed ONCE over the whole batch and sliced per tile
-    from ..options import ContourDirection
-    from .extract import boundary_mask
-
-    clockwise_output = options.output_direction == ContourDirection.CLOCKWISE
-    rule_masks = {rule: boundary_mask(all_fills, rule) for rule in rules}
-    # vectorized degree-2 walk + finalize over the whole batch per rule; tiles it
-    # cannot serve (pinch points / huge rings) fall back to the scalar walk below
-    fast_shapes: dict[OverlayRule, dict[int, Shapes]] = {}
-    fast_mask: dict[OverlayRule, np.ndarray] = {}
-    for rule in rules:
-        if not fast_extract:
-            fast_mask[rule] = np.zeros(nj, dtype=bool)
-            fast_shapes[rule] = {}
-            continue
-        tile_fast, ring_data = _fast_contours_batch(
-            segs, rule_masks[rule], all_fills, starts, rule, clockwise_output, off, y0
-        )
-        fast_mask[rule] = tile_fast
-        if ring_data is None:
-            fast_shapes[rule] = {}
-        else:
-            fast_shapes[rule] = _finalize_fast(ring_data, options, with_areas=with_areas)
-    any_slow = ~np.ones(nj, dtype=bool)
-    for rule in rules:
-        any_slow |= ~fast_mask[rule]
-    if any_slow.any():
-        # job-local endpoint lists for EVERY link, adjusted batch-wide in numpy
-        # (per-tile numpy slicing + zipping was ~15% of the batch wall);
-        # per tile these are O(1)-ish list slices feeding ONE _LinkGraph shared
-        # by every rule's walk (dead links pre-visited per rule)
-        from .extract import _LinkGraph, finalize_contours, walk_contours
-
-        link_off = np.repeat(off, np.diff(starts))
-        all_pa = list(zip((segs.ax - link_off).tolist(), (segs.ay + y0).tolist()))
-        all_pb = list(zip((segs.bx - link_off).tolist(), (segs.by + y0).tolist()))
-        all_fl = all_fills.tolist()
-    clockwise = clockwise_output
-    for slot in range(nj):
-        lo, hi = int(starts[slot]), int(starts[slot + 1])
-        if lo == hi:
-            continue
-        if any_slow[slot]:
-            g = _LinkGraph(all_pa[lo:hi], all_pb[lo:hi], all_fl[lo:hi])
-        for rule in rules:
-            if fast_mask[rule][slot]:
-                results[slot][rule] = fast_shapes[rule].get(slot, _mt())
-            else:
-                contours = walk_contours(
-                    None, None, rule, clockwise, rule_masks[rule][lo:hi], g
-                )
-                results[slot][rule] = finalize_contours(
-                    contours, options, with_areas=with_areas
-                )
-    return results

@@ -184,7 +184,7 @@ def overlay_rows(
     iOverlay/src/core/overlay.rs:303-313), batched through kernel/batch.py.
 
     Runs as mapInArrow with a FLAT ring layout on both sides: the list columns'
-    offsets+values feed overlay_batch_flat with zero per-row Python, and the
+    offsets+values feed overlay_batch_flat_out with zero per-row Python, and the
     output rings are emitted as one concatenated value buffer per column
     (pa.ListArray.from_arrays) instead of per-ring python lists — the
     job-assembly + emission overhead was ~45 us/job of the ~260 us/job worker

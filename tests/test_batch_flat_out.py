@@ -1,7 +1,8 @@
 """Differential tests: overlay_batch_flat_out (FLAT job/shape/contour/lens/pts/
-area2 arrays) vs overlay_batch_flat(with_areas=True) — ring sets, ordering, and
-areas must be BIT-IDENTICAL (the flat tail is an emission strategy, not an
-approximation), across random stars, holes, degenerates, multi-hull slots that
+area2 arrays) vs the per-job scalar kernel (_scalar_batch, what
+overlay_batch([job]) runs) — ring sets, ordering, and areas must be
+BIT-IDENTICAL (batching and the flat tail are execution strategies, not
+approximations), across random stars, holes, degenerates, multi-hull slots that
 force the per-slot fallback, unsorted ring_job layouts, and both extract paths.
 Also covers overlay()'s >=256-ring clustered flat route vs the monolithic
 graph, order-canonically (output shape order is not contract, kernel/overlay.py
@@ -13,12 +14,9 @@ import random
 import numpy as np
 import pytest
 
-from ioverlay_spark.kernel.batch import (
-    overlay_batch_flat,
-    overlay_batch_flat_out,
-)
+from ioverlay_spark.kernel.batch import _scalar_batch, overlay_batch_flat_out
 from ioverlay_spark.kernel.overlay import CLUSTER_MIN_RINGS, build_graph, overlay
-from ioverlay_spark.options import ALL_RULES, FillRule, OverlayRule
+from ioverlay_spark.options import ALL_RULES, DEFAULT_OPTIONS, FillRule, OverlayRule
 
 RULES = list(ALL_RULES)
 
@@ -84,7 +82,7 @@ def flat_to_jobs(flat, nj):
 
 
 def shapes_to_rows(res_with_areas):
-    """overlay_batch_flat(with_areas=True) per-job result for one rule ->
+    """_scalar_batch(with_areas=True) per-job result for one rule ->
     [(shape_id, contour_idx, ring_pts, area2), ...] in emission order."""
     shapes, areas = res_with_areas
     rows = []
@@ -100,10 +98,10 @@ def assert_flat_matches(jobs, fill_rule, shuffle_seed=None, fast_extract=None):
         P, counts, ring_job, ring_subj, nj, RULES, fill_rule,
         fast_extract=fast_extract,
     )
-    ref = overlay_batch_flat(
-        P, counts, ring_job, ring_subj, nj, RULES, fill_rule,
-        fast_extract=fast_extract, with_areas=True,
-    )
+    ref = [
+        _scalar_batch([job], RULES, fill_rule, DEFAULT_OPTIONS, with_areas=True)[0]
+        for job in jobs
+    ]
     for rule in RULES:
         got_per_job = flat_to_jobs(flat[rule], nj)
         for j in range(nj):

@@ -85,6 +85,27 @@ def test_batch_holes_and_degenerates():
     assert_batch_equals_scalar(jobs, FillRule.EVEN_ODD)
 
 
+def test_batch_wide_coordinates_scalar_fallback():
+    """Coordinates past the batch cap take the per-job scalar kernel, whose
+    ring areas exceed int64 at 2^35-sized rings: shapes and exact python-int
+    areas must still come back per job."""
+    from ioverlay_spark.kernel.extract import ring_area2
+
+    o, s = 1 << 40, 1 << 35
+    jobs = [
+        ([rect(o, o, s, s)], [rect(o + s // 2, o, s, s)]),
+        ([rect(0, 0, 10, 10)], [rect(5, 5, 10, 10)]),
+    ]
+    assert_batch_equals_scalar(jobs, FillRule.NON_ZERO)
+    batch = overlay_batch(jobs, RULES, FillRule.NON_ZERO, with_areas=True)
+    for (subj, clip), b in zip(jobs, batch):
+        g = build_graph(subj, clip, FillRule.NON_ZERO)
+        for rule in RULES:
+            shapes, areas = b[rule]
+            assert areas == [[ring_area2(r) for r in s] for s in g.extract(rule)]
+    assert max(abs(a) for s in batch[0][RULES[0]][1] for a in s) >= 1 << 63
+
+
 def test_batch_result_independent_of_batch_composition():
     """A job's result must not depend on its batch mates or slot position."""
     jobs = [([rect(i * 7, i * 3, 100 + i, 80 + i)], [rect(i * 7 + 30, i * 3 + 20, 90, 70)]) for i in range(20)]

@@ -68,6 +68,24 @@ def _kernel_split(subj, clip):
     return split_segments(sort_and_merge(segs))
 
 
+def _kernel_fill_rows(segs, fill_rule, boundary_rule=None):
+    """Sorted (ax, ay, bx, by, fill) rows of the scalar fill kernel over
+    `segs`, boundary-filtered for `boundary_rule` when given."""
+    from ioverlay_spark.kernel import compute_fills
+    from ioverlay_spark.kernel.extract import boundary_mask
+
+    kf = compute_fills(segs, fill_rule)
+    keep = np.ones(len(kf), dtype=bool)
+    if boundary_rule is not None:
+        keep = boundary_mask(kf.astype(np.uint8), boundary_rule)
+    return sorted(
+        zip(
+            segs.ax[keep].tolist(), segs.ay[keep].tolist(),
+            segs.bx[keep].tolist(), segs.by[keep].tolist(), kf[keep].tolist(),
+        )
+    )
+
+
 def test_distributed_split_merge_matches_kernel(spark, board):
     subj, clip, df = board
     from ioverlay_spark.operators.distributed import contours_to_segments_df, split_segments_df
@@ -92,7 +110,6 @@ def test_distributed_split_merge_matches_kernel(spark, board):
 
 def test_distributed_fills_match_kernel(spark, board):
     subj, clip, df = board
-    from ioverlay_spark.kernel import compute_fills
     from ioverlay_spark.options import FillRule
     from ioverlay_spark.operators.distributed import (
         compute_fills_df,
@@ -103,22 +120,36 @@ def test_distributed_fills_match_kernel(spark, board):
     split = split_segments_df(contours_to_segments_df(spark, df))
     fills = compute_fills_df(split, FillRule.EVEN_ODD, n_strips=7).toPandas()
 
-    ker = _kernel_split(subj, clip)
-    kf = compute_fills(ker, FillRule.EVEN_ODD)
-    exp = sorted(
-        zip(ker.ax.tolist(), ker.ay.tolist(), ker.bx.tolist(), ker.by.tolist(), kf.tolist())
-    )
+    exp = _kernel_fill_rows(_kernel_split(subj, clip), FillRule.EVEN_ODD)
     got = sorted(map(tuple, fills[["ax", "ay", "bx", "by", "fill"]].to_numpy().tolist()))
     assert got == exp
 
 
-def test_packed_fill_matches_legacy_explode(spark, board):
-    """The packed blob shuffle (default) and the legacy row-explode shuffle
-    must produce the identical fill multiset — including a wide-coordinate
-    segment that defeats the pack stage's per-partition int32 narrowing and a
-    boundary_rule push-down on both paths."""
-    import os
+def test_distributed_fills_two_level_strips_match_kernel(spark, board):
+    """n_strips=64 on a small board: most segments span several strips and
+    many strips hold only crossing (non-home) copies; fills must still be
+    exact (the strip kernel sees every segment crossing each strip)."""
+    subj, clip, df = board
+    from ioverlay_spark.options import FillRule
+    from ioverlay_spark.operators.distributed import (
+        compute_fills_df,
+        contours_to_segments_df,
+        split_segments_df,
+    )
 
+    split = split_segments_df(contours_to_segments_df(spark, df))
+    fills = compute_fills_df(split, FillRule.EVEN_ODD, n_strips=64).toPandas()
+
+    exp = _kernel_fill_rows(_kernel_split(subj, clip), FillRule.EVEN_ODD)
+    got = sorted(map(tuple, fills[["ax", "ay", "bx", "by", "fill"]].to_numpy().tolist()))
+    assert got == exp
+
+
+def test_distributed_fills_one_strip_match_kernel(spark, board):
+    """n_strips=1 (no strip edges) runs the same packed plan with every
+    segment home in strip 0: fills equal the scalar kernel's, and an empty
+    segment set gives zero rows."""
+    subj, clip, df = board
     from ioverlay_spark.options import FillRule, OverlayRule
     from ioverlay_spark.operators.distributed import (
         compute_fills_df,
@@ -126,35 +157,56 @@ def test_packed_fill_matches_legacy_explode(spark, board):
         split_segments_df,
     )
 
-    _, _, df = board
     split = split_segments_df(contours_to_segments_df(spark, df)).localCheckpoint()
+    ker = _kernel_split(subj, clip)
+    cols = ["ax", "ay", "bx", "by", "fill"]
+    for fr, br in ((FillRule.EVEN_ODD, None), (FillRule.NON_ZERO, OverlayRule.XOR)):
+        pdf = compute_fills_df(split, fr, n_strips=1, boundary_rule=br).toPandas()
+        got = sorted(map(tuple, pdf[cols].to_numpy().tolist()))
+        assert got == _kernel_fill_rows(ker, fr, br) and len(got) > 0
 
-    def run(br=None):
-        pdf = compute_fills_df(split, FillRule.EVEN_ODD, n_strips=5, boundary_rule=br).toPandas()
-        cols = ["ax", "ay", "bx", "by", "fill"]
-        return sorted(map(tuple, pdf[cols].to_numpy().tolist()))
+    empty = spark.createDataFrame(
+        [], "ax long, ay long, bx long, by long, subj long, clip long"
+    )
+    for n_strips in (1, None):
+        assert compute_fills_df(empty, FillRule.EVEN_ODD, n_strips=n_strips).count() == 0
+
+
+def test_packed_fill_matches_legacy_explode(spark, board):
+    """The packed blob shuffle must produce the scalar kernel's fill multiset
+    — with and without a boundary_rule push-down, and on a wide-coordinate
+    input that defeats the pack stage's per-partition int32 narrowing."""
+    from ioverlay_spark.kernel.segments import Segments
+    from ioverlay_spark.options import FillRule, OverlayRule
+    from ioverlay_spark.operators.distributed import (
+        compute_fills_df,
+        contours_to_segments_df,
+        split_segments_df,
+    )
+
+    subj, clip, df = board
+    split = split_segments_df(contours_to_segments_df(spark, df)).localCheckpoint()
+    ker = _kernel_split(subj, clip)
+    cols = ["ax", "ay", "bx", "by", "fill"]
 
     for br in (None, OverlayRule.UNION):
-        packed = run(br)
-        os.environ["SPARK_GRAFT_FILL_PACKED"] = "0"
-        try:
-            legacy = run(br)
-        finally:
-            os.environ.pop("SPARK_GRAFT_FILL_PACKED", None)
-        assert packed == legacy and len(packed) > 0
+        pdf = compute_fills_df(split, FillRule.EVEN_ODD, n_strips=5, boundary_rule=br).toPandas()
+        got = sorted(map(tuple, pdf[cols].to_numpy().tolist()))
+        assert got == _kernel_fill_rows(ker, FillRule.EVEN_ODD, br) and len(got) > 0
 
     # wide coordinates (beyond int32) keep 8-byte words through the pack stage
-    wide = spark.createDataFrame(
-        [
-            (0, 0, 2**40, 2**40, 1, 0),
-            (0, 2**40, 2**40, 0, 1, 0),
-            (0, 0, 2**40, 0, 1, 0),
-        ],
-        ["ax", "ay", "bx", "by", "subj", "clip"],
-    )
+    rows = [
+        (0, 0, 2**40, 2**40, 1, 0),
+        (0, 2**40, 2**40, 0, 1, 0),
+        (0, 0, 2**40, 0, 1, 0),
+    ]
+    wide = spark.createDataFrame(rows, ["ax", "ay", "bx", "by", "subj", "clip"])
     got = compute_fills_df(wide, FillRule.EVEN_ODD, n_strips=2).toPandas()
-    assert len(got) == 3
-    assert got["ax"].min() >= 0 and got["bx"].max() == 2**40
+    wide_segs = Segments(*(np.array(c, dtype=np.int64) for c in zip(*rows)))
+    assert sorted(map(tuple, got[cols].to_numpy().tolist())) == _kernel_fill_rows(
+        wide_segs, FillRule.EVEN_ODD
+    )
+    assert got["bx"].max() == 2**40
 
 
 def test_distributed_fills_match_kernel_long_chords(spark):
@@ -341,67 +393,44 @@ def test_fused_extract_matches_salted_path(spark, board, monkeypatch):
         assert set(pdf.loc[pdf["is_hole"], "shape_id"]).issubset(hull_ids)
 
 
-def test_fused_extract_packed_matches_row_feed(spark, board, monkeypatch):
-    """The packed-blob boundary transfer (default) must emit exactly the rings
-    of the row-form repartition(1) feed — both the int32-narrowed blob layout
-    (small coords) and the int64 layout (wide coords, > 2^31 grid)."""
-    import ioverlay_spark.operators.distributed_extract as dx
-    from ioverlay_spark.options import FillRule, OverlayRule
-    from ioverlay_spark.operators.distributed import (
-        compute_fills_df,
-        contours_to_segments_df,
-        split_segments_df,
+def _canon_rings(pdf):
+    rows = []
+    for r in pdf.itertuples():
+        pts = sorted(zip(r.pts_x, r.pts_y))
+        rows.append((bool(r.is_hole), int(r.area2), tuple(pts)))
+    return sorted(rows)
+
+
+def _scalar_canon_rings(subj, clip, rule, fill_rule):
+    """_canon_rings of the scalar kernel's overlay (hole = contour index > 0)."""
+    from ioverlay_spark.kernel import overlay
+    from ioverlay_spark.kernel.extract import ring_area2
+
+    shapes = overlay(
+        [np.array(r, dtype=np.int64) for r in subj],
+        [np.array(r, dtype=np.int64) for r in clip],
+        rule,
+        fill_rule,
     )
-
-    def canon(pdf):
-        rows = []
-        for r in pdf.itertuples():
-            pts = sorted(zip(r.pts_x, r.pts_y))
-            rows.append((bool(r.is_hole), int(r.area2), tuple(pts)))
-        return sorted(rows)
-
-    subj, clip, df = board
-    for shift in (0, 1 << 40):  # int32 blob layout, then the wide int64 one
-        sdf = df
-        if shift:
-            sdf = df.selectExpr(
-                "role",
-                "cid",
-                f"transform(pts_x, x -> x + {shift}L) AS pts_x",
-                f"transform(pts_y, y -> y + {shift}L) AS pts_y",
-            )
-        fills = compute_fills_df(
-            split_segments_df(contours_to_segments_df(spark, sdf)),
-            FillRule.EVEN_ODD,
-        ).localCheckpoint(eager=True)
-        monkeypatch.setenv("SPARK_GRAFT_EXTRACT_PACKED", "1")
-        packed = dx.extract_shapes_df(fills, OverlayRule.XOR).toPandas()
-        monkeypatch.setenv("SPARK_GRAFT_EXTRACT_PACKED", "0")
-        row_form = dx.extract_shapes_df(fills, OverlayRule.XOR).toPandas()
-        monkeypatch.delenv("SPARK_GRAFT_EXTRACT_PACKED")
-        assert canon(packed) == canon(row_form)
-        assert len(packed) == 2
+    return sorted(
+        (ci > 0, int(ring_area2(ring)), tuple(sorted(map(tuple, np.asarray(ring).tolist()))))
+        for shape in shapes
+        for ci, ring in enumerate(shape)
+    )
 
 
 def test_boundary_blob_feed_matches_row_feed(spark, monkeypatch):
-    """The fill stage's in-kernel boundary blob pack (distributed_overlay
-    default, BOUNDARY_BLOB_SCHEMA) must produce exactly the rings of the
-    per-segment row feed — on the fused path, on the wide-coordinate int64
-    blob layout, and through the giant-boundary fallback that unpacks blobs
-    back to rows for the salted multi-task plan."""
+    """The fill stage's in-kernel boundary blob pack (BOUNDARY_BLOB_SCHEMA,
+    the only feed distributed_overlay uses) must produce the scalar kernel's
+    rings and the closed form's n^2 squares — on the int32 blob layout, on the
+    wide-coordinate int64 layout, and through the giant-boundary fallback that
+    unpacks blobs back to rows for the salted multi-task plan."""
     import ioverlay_spark.operators.distributed_extract as dx
     from ioverlay_spark.options import FillRule, OverlayRule
     from ioverlay_spark.operators.distributed import (
         contours_to_segments_df,
         distributed_overlay,
     )
-
-    def canon(pdf):
-        rows = []
-        for r in pdf.itertuples():
-            pts = sorted(zip(r.pts_x, r.pts_y))
-            rows.append((bool(r.is_hole), int(r.area2), tuple(pts)))
-        return sorted(rows)
 
     n, a = 12, 20
     subj, clip = lines_net(n, a)
@@ -412,31 +441,20 @@ def test_boundary_blob_feed_matches_row_feed(spark, monkeypatch):
             rings_to_contours_rows(s_s, c_s), ["role", "cid", "pts_x", "pts_y"]
         )
         segs = contours_to_segments_df(spark, df)
-        monkeypatch.setenv("SPARK_GRAFT_BOUNDARY_BLOB", "0")
-        row_form = distributed_overlay(
-            segs, OverlayRule.INTERSECT, FillRule.EVEN_ODD, force_distributed=True
-        ).toPandas()
-        monkeypatch.setenv("SPARK_GRAFT_BOUNDARY_BLOB", "1")
         blob = distributed_overlay(
             segs, OverlayRule.INTERSECT, FillRule.EVEN_ODD, force_distributed=True
         ).toPandas()
-        # env-gated ring-blob fused OUTPUT (chunked binary rings + parallel
-        # unpack stage) must emit identical rings
-        monkeypatch.setenv("SPARK_GRAFT_RING_BLOB", "1")
-        ring_blob = distributed_overlay(
-            segs, OverlayRule.INTERSECT, FillRule.EVEN_ODD, force_distributed=True
-        ).toPandas()
-        monkeypatch.delenv("SPARK_GRAFT_RING_BLOB")
         # giant-boundary fallback: blobs unpack to rows for the salted plan
         monkeypatch.setattr(dx, "_FUSED_EXTRACT_CAP", 0)
         blob_salted = distributed_overlay(
             segs, OverlayRule.INTERSECT, FillRule.EVEN_ODD, force_distributed=True
         ).toPandas()
         monkeypatch.undo()
-        assert canon(blob) == canon(row_form)
-        assert canon(ring_blob) == canon(row_form)
-        assert canon(blob_salted) == canon(row_form)
+        exp = _scalar_canon_rings(s_s, c_s, OverlayRule.INTERSECT, FillRule.EVEN_ODD)
+        assert _canon_rings(blob) == exp
+        assert _canon_rings(blob_salted) == exp
         assert len(blob) == n * n
+        assert int(blob["area2"].sum()) == 2 * n * n * (a // 2) * (a // 2)
 
 
 def lines_net(n: int, a: int = 20):
@@ -565,12 +583,11 @@ def test_narrow_boundary_schema(spark):
         assert wide == dict(b.dtypes)
 
 
-def test_fused_apply_pack_matches_legacy(spark, monkeypatch):
+def test_fused_apply_pack_matches_legacy(spark):
     """The fused terminal apply+pack (_apply_pack_strips_iter: numpy
     _apply_marks + strip pack inside one mapInArrow, replacing the JVM chain
-    sort/zip_with/Generate pipeline) must produce the identical ring multiset
-    through the full distributed pipeline, and its fill plan must contain no
-    Generate (the chain explode happens in numpy)."""
+    sort/zip_with/Generate pipeline) must produce the scalar kernel's ring
+    multiset through the full distributed pipeline."""
     from ioverlay_spark.options import FillRule, OverlayRule
     from ioverlay_spark.operators.distributed import (
         contours_to_segments_df,
@@ -581,31 +598,21 @@ def test_fused_apply_pack_matches_legacy(spark, monkeypatch):
     df = spark.createDataFrame(
         rings_to_contours_rows(subj, clip), ["role", "cid", "pts_x", "pts_y"]
     ).localCheckpoint()
-
-    def run(flag):
-        monkeypatch.setenv("SPARK_GRAFT_APPLY_FUSED", flag)
-        out = distributed_overlay(
-            contours_to_segments_df(spark, df),
-            OverlayRule.INTERSECT,
-            FillRule.EVEN_ODD,
-            force_distributed=True,
-        )
-        pdf = out.toPandas()
-        rings = sorted(
-            (int(a), tuple(sorted(zip(x, y))))
-            for a, x, y in zip(pdf["area2"], pdf["pts_x"], pdf["pts_y"])
-        )
-        return rings
-
-    fused = run("1")
-    legacy = run("0")
-    assert fused == legacy and len(fused) == 24 * 24
+    out = distributed_overlay(
+        contours_to_segments_df(spark, df),
+        OverlayRule.INTERSECT,
+        FillRule.EVEN_ODD,
+        force_distributed=True,
+    ).toPandas()
+    exp = _scalar_canon_rings(subj, clip, OverlayRule.INTERSECT, FillRule.EVEN_ODD)
+    assert _canon_rings(out) == exp and len(exp) == 24 * 24
 
 
-def test_fused_apply_pack_plan_and_fills(spark, monkeypatch):
-    """Fill-level differential on the lazy-terminal path: identical fill
-    multiset fused vs legacy, the fused inputs attach only on the eligible
-    terminal round, and the fused fill plan has no Generate node."""
+def test_fused_apply_pack_plan_and_fills(spark):
+    """Fill-level differential on the lazy-terminal path: the fused inputs
+    attach on the eligible terminal round, the fused fill plan has no
+    Generate node (the chain explode happens in numpy), and its boundary fill
+    multiset equals the scalar kernel's."""
     from ioverlay_spark.options import FillRule, OverlayRule
     from ioverlay_spark.operators.distributed import (
         compute_fills_df,
@@ -626,18 +633,12 @@ def test_fused_apply_pack_plan_and_fills(spark, monkeypatch):
     )
     assert getattr(split, "_ioverlay_apply_inputs", None) is not None
 
-    def run(flag):
-        monkeypatch.setenv("SPARK_GRAFT_APPLY_FUSED", flag)
-        fills = compute_fills_df(
-            split, FillRule.EVEN_ODD, boundary_rule=OverlayRule.INTERSECT
-        )
-        plan = fills._jdf.queryExecution().executedPlan().toString()
-        pdf = fills.toPandas()
-        cols = ["ax", "ay", "bx", "by", "fill"]
-        return plan, sorted(map(tuple, pdf[cols].to_numpy().tolist()))
-
-    plan_f, fused = run("1")
-    plan_l, legacy = run("0")
-    assert fused == legacy and len(fused) > 0
-    assert "Generate" not in plan_f
-    assert "Generate" in plan_l  # the legacy chain explode really was in play
+    fills = compute_fills_df(split, FillRule.EVEN_ODD, boundary_rule=OverlayRule.INTERSECT)
+    plan = fills._jdf.queryExecution().executedPlan().toString()
+    assert "Generate" not in plan
+    pdf = fills.toPandas()
+    got = sorted(map(tuple, pdf[["ax", "ay", "bx", "by", "fill"]].to_numpy().tolist()))
+    exp = _kernel_fill_rows(
+        _kernel_split(subj, clip), FillRule.EVEN_ODD, OverlayRule.INTERSECT
+    )
+    assert got == exp and len(got) > 0
